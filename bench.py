@@ -220,8 +220,9 @@ def cdc_pipeline_throughput(spark, sf_dir: str) -> dict:
 
         # scale-mode sink: same DAG, one partitioned JSON write per batch
         changes = cl.read_changelog(spark, log_dir)
-        changed = pl._changed_invoices(changes, lines, model)
-        docs = pl._assemble(orders, lines, pl._latest_with_op(changed), model)
+        docs = pl._documents(spark, model, changes, orders, lines).filter(
+            "doc_filename IS NOT NULL"
+        )
         t1 = _t.perf_counter()
         n_part = pl.write_documents_partitioned(
             docs, os.path.join(tmp, "docs_part"), batch_id=0

@@ -11,14 +11,21 @@ sqls/storedprocedure.sql:4-57) rebuilt two ways:
    offsets replace the hand-rolled cursor, idempotent (deterministically
    named) document writes give effectively-exactly-once (T3).
 
-Both compose the same batch operators (sql_cdc_spark.operators.cdc /
-documents), so the relational core is written once.
+Both run the same generated Spark SQL statement (``_documents_sql``),
+so the relational core is written once: the pull binds its cursor,
+watermark and limit as parameter markers, a stream micro-batch runs it
+unbounded.
 
-Scale stance: the document sink writes per-partition in parallel (the
-reference's sequential per-record loop, server.js:183-203, is the one
-thing deliberately NOT reproduced). On a cluster, out_dir must be a
-shared filesystem (S3/HDFS); the per-record JSON mode exists for parity,
-`df.write.json` partitioned-by-batch is the 100 TB path.
+Scale stance: a pull is the watermark plus ONE Spark action. Its
+≤ ``limit`` documents come to the driver with the keys the cursor needs
+anyway, and the driver writes them — at the reference's batch size a
+pull is bound by fixed per-job cost, not by data, so a second
+(partition-parallel) sink job would only add cost. A stream micro-batch
+streams its documents to the driver one partition at a time. The
+per-record JSON/BSON files exist for parity with the reference
+(server.js:183-203); at scale, ``write_documents_partitioned`` — one
+partition-parallel ``df.write.json`` per batch — is the 100 TB path. On
+a cluster, out_dir must be a shared filesystem (S3/HDFS).
 """
 
 from __future__ import annotations
@@ -26,13 +33,12 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_cdc_spark.operators import cdc
-from sql_cdc_spark.operators.documents import assemble_documents, documents_to_json
 from sql_cdc_spark.streaming import changelog as cl
 from sql_cdc_spark.streaming.registry import SyncStateRegistry
 
@@ -51,6 +57,16 @@ class InvoiceModel:
 
 @dataclass
 class BatchResult:
+    """One pull's outcome. ``stage_ms`` splits its wall time:
+
+    - ``read_state``: reading the consumer's cursor;
+    - ``query``: from the watermark to the batch's rows — documents
+      assembled — on the driver (watermark included);
+    - ``sink``: the document file writes only;
+    - ``update_state``: the cursor advance.
+
+    An empty pull stops after ``query``."""
+
     consumer: str
     from_version: int
     to_version: int
@@ -62,64 +78,114 @@ class BatchResult:
     docs_per_second: float = 0.0
 
 
-def _changed_invoices(
-    changes: DataFrame, lines: DataFrame, model: InvoiceModel
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _documents_sql(model: InvoiceModel, bounded: bool) -> str:
+    """The reference's sproc (sqls/storedprocedure.sql:4-57) as one Spark
+    SQL statement over the ``{log}``, ``{header}`` and ``{lines}`` frames,
+    generated from the model:
+
+    - change scan: header rows pass through; line rows recover the
+      invoice key by joining the base line table on the line PK
+      (storedprocedure.sql:14-26);
+    - latest-per-key carrying the winning version's op: one
+      map-side-combining ``max(struct(version, op))`` (:28-34);
+    - ``bounded`` only: the snapshot-bounded inclusive re-read
+      ``version BETWEEN :from_version AND :to_version``, the composite
+      keyset filter strictly after ``(:cursor_version, :cursor_id)``
+      (server.js:165-168) and a ``LIMIT :limit`` under the total
+      (version, key) order (:35,56);
+    - header enrichment and the nested line array, sorted by the line
+      order column (:42-52), serialized to JSON under the deterministic
+      name ``{invoice}_v{version}.json`` (server.js:64-65, timestamp
+      dropped: determinism IS the idempotency mechanism).
+
+    One row per batched key: ``(invoice_id, change_version, doc_filename,
+    doc_json)``. A key with no header row (a deleted invoice) keeps its
+    row with a null filename and document: it produces no document but is
+    still consumed, so the cursor advances over it. The header and line
+    rows of the batched keys are picked by semi-joins against the batch
+    (a broadcast while it is small, as a pull's is), so only the batch's
+    own lines reach a shuffle, and one aggregation per key nests them:
+    the documents need no outer join."""
+    hk, pk = _ident(model.header_key), _ident(model.line_parent_key)
+    header_cols = [_ident(c) for c in model.header_cols if c != model.header_key]
+    line_cols = [_ident(model.line_order_col)] + [
+        _ident(c) for c in model.line_cols if c != model.line_order_col
+    ]
+    in_range = (
+        " WHERE change_version BETWEEN :from_version AND :to_version" if bounded else ""
+    )
+    batch = (
+        "SELECT invoice_id, m.change_version AS change_version, m.op AS op FROM latest"
+    )
+    if bounded:
+        batch += (
+            " WHERE m.change_version > :cursor_version"
+            " OR (m.change_version = :cursor_version AND invoice_id > :cursor_id)"
+            " ORDER BY change_version, invoice_id LIMIT :limit"
+        )
+    hdr_fields = "".join(f", hdr.{c} AS {c}" for c in header_cols)
+    return f"""
+WITH changes AS (
+  SELECT * FROM {{log}}{in_range}
+), changed AS (
+  SELECT key_id AS invoice_id, change_version, op FROM changes
+  WHERE table_name = :header_table
+  UNION ALL
+  SELECT l.invoice_id, c.change_version, c.op FROM changes c
+  JOIN (SELECT {model.line_key_expr} AS line_id, {pk} AS invoice_id FROM {{lines}}) l
+    ON l.line_id = c.key_id
+  WHERE c.table_name = :line_table
+), latest AS (
+  SELECT invoice_id, max(struct(change_version, op)) AS m FROM changed
+  GROUP BY invoice_id
+), batch AS (
+  {batch}
+), parts AS (
+  SELECT invoice_id, change_version, op, NULL AS hdr, NULL AS line FROM batch
+  UNION ALL
+  SELECT h.{hk}, NULL, NULL, struct({", ".join(f"h.{c}" for c in [hk, *header_cols])}), NULL
+  FROM {{header}} h LEFT SEMI JOIN batch b ON h.{hk} = b.invoice_id
+  UNION ALL
+  SELECT l.{pk}, NULL, NULL, NULL, struct({", ".join(f"l.{c}" for c in line_cols)})
+  FROM {{lines}} l LEFT SEMI JOIN batch b ON l.{pk} = b.invoice_id
+), keyed AS (
+  SELECT invoice_id, first(change_version, true) AS change_version,
+         first(op, true) AS op, first(hdr, true) AS hdr,
+         array_sort(collect_list(line)) AS lines
+  FROM parts GROUP BY invoice_id
+)
+SELECT invoice_id, change_version,
+  IF(hdr IS NULL, NULL, concat(CAST(invoice_id AS STRING), '_v',
+     CAST(change_version AS STRING), '.json')) AS doc_filename,
+  IF(hdr IS NULL, NULL, to_json(struct(
+     invoice_id, change_version, op{hdr_fields}, lines))) AS doc_json
+FROM keyed
+"""
+
+
+def _documents(
+    session: SparkSession,
+    model: InvoiceModel,
+    changes: DataFrame,
+    header: DataFrame,
+    lines: DataFrame,
+    bounds: dict | None = None,
 ) -> DataFrame:
-    """(invoice_id, change_version, op) for every change row: header rows
-    pass through; line rows recover the invoice key by joining the base
-    line table on the line PK (sqls/storedprocedure.sql:14-26)."""
-    header_changes = changes.filter(F.col("table_name") == cl.HEADER_TABLE).select(
-        F.col("key_id").alias("invoice_id"), "change_version", "op"
-    )
-    line_changes = changes.filter(F.col("table_name") == cl.LINE_TABLE).select(
-        F.col("key_id").alias("line_id"), "change_version", "op"
-    )
-    lines_keyed = lines.select(
-        F.expr(model.line_key_expr).alias("line_id"),
-        F.col(model.line_parent_key).alias("invoice_id"),
-    )
-    recovered = line_changes.join(lines_keyed, "line_id", "inner").select(
-        "invoice_id", "change_version", "op"
-    )
-    return cdc.union_change_streams(header_changes, recovered)
-
-
-def _latest_with_op(changed: DataFrame) -> DataFrame:
-    """A1 carrying the op of the winning version: max(struct(version, op))
-    per invoice — one map-side-combining aggregation."""
-    return changed.groupBy("invoice_id").agg(
-        F.max(F.struct("change_version", "op")).alias("__m")
-    ).select("invoice_id", F.col("__m.change_version").alias("change_version"), F.col("__m.op").alias("op"))
-
-
-def _assemble(header: DataFrame, lines: DataFrame, latest: DataFrame, model: InvoiceModel) -> DataFrame:
-    """J2 + J4/A3: enrich changed keys against the header (broadcast the
-    small changed set) and nest the sorted line array; serialize to JSON
-    with the reference's filename scheme {invoice}_v{version}.json
-    (invoice-api/server.js:64-65 — timestamp dropped: determinism IS the
-    idempotency mechanism)."""
-    hdr = header.withColumnRenamed(model.header_key, "invoice_id").join(
-        F.broadcast(latest), "invoice_id", "inner"
-    )
-    docs = assemble_documents(
-        hdr,
-        lines,
-        key_col="invoice_id",
-        header_cols=["invoice_id", "change_version", "op"]
-        + [c for c in model.header_cols if c != model.header_key],
-        line_cols=model.line_cols,
-        line_order_col=model.line_order_col,
-        line_key_col=model.line_parent_key,
-    )
-    docs = documents_to_json(docs)
-    return docs.withColumn(
-        "doc_filename",
-        F.concat(
-            F.col("invoice_id").cast("string"),
-            F.lit("_v"),
-            F.col("change_version").cast("string"),
-            F.lit(".json"),
-        ),
+    """The documents frame of ``_documents_sql``: the change frame, header
+    and lines go in as ``spark.sql`` DataFrame arguments and the cursor
+    and watermark as named parameter markers. ``bounds`` (``from_version``,
+    ``to_version``, ``cursor_version``, ``cursor_id``, ``limit``) selects
+    the pull's bounded batch; without it every key of ``changes`` is
+    batched (a stream micro-batch)."""
+    args = {"header_table": cl.HEADER_TABLE, "line_table": cl.LINE_TABLE, **(bounds or {})}
+    return session.sql(
+        _documents_sql(model, bounds is not None), args=args,
+        log=changes, header=header, lines=lines,
     )
 
 
@@ -174,47 +240,49 @@ def _segregate_error(error_dir: str, fname: str, payload, exc: Exception) -> Non
     )
 
 
-def _per_record_sink(
-    docs: DataFrame, out_dir: str, error_dir: str | None, write_one
-) -> int:
-    """Shared partition-parallel per-record sink core (Arrow batches via
-    mapInPandas — no pickled-Row traffic). ``write_one(fname, payload)``
-    does the format-specific write. With ``error_dir`` set, a record
-    whose write raises is segregated there and the batch CONTINUES;
-    without it, the exception propagates and fails the batch (the
-    pre-round-4 behavior). Each task reports delivered/errored counts so
-    the advance-only-on-success guard sees true totals."""
+def _deliver(docs, out_dir: str, error_dir: str | None, write_one) -> int:
+    """Per-record delivery of ``(doc_filename, doc_json)`` pairs from the
+    driver. ``write_one(out_dir, fname, payload)`` does the format-specific
+    write. With ``error_dir`` set, a record whose write raises is
+    segregated there and the batch CONTINUES; without it, the exception
+    propagates and fails the batch. Returns the number of documents
+    DELIVERED (excluding segregated errors), so the advance-only-on-success
+    guard sees true totals."""
     os.makedirs(out_dir, exist_ok=True)
-    payload = docs.select("doc_filename", "doc_json")
+    n = 0
+    for fname, js in docs:
+        try:
+            write_one(out_dir, fname, js)
+            n += 1
+        except Exception as exc:  # noqa: BLE001 — segregation path
+            if error_dir is None:
+                raise
+            _segregate_error(error_dir, fname, js, exc)
+    return n
 
-    def _write_batches(batches):
-        import pandas as pd
 
-        n, n_err = 0, 0
-        for pdf in batches:
-            for fname, js in zip(pdf["doc_filename"], pdf["doc_json"]):
-                try:
-                    write_one(fname, js)
-                    n += 1
-                except Exception as exc:  # noqa: BLE001 — segregation path
-                    if error_dir is None:
-                        raise
-                    _segregate_error(error_dir, fname, js, exc)
-                    n_err += 1
-        yield pd.DataFrame({"n": [n], "n_err": [n_err]})
+def _write_json(out_dir: str, fname: str, js) -> None:
+    _atomic_write(os.path.join(out_dir, fname), js)
 
-    counts = (
-        payload.mapInPandas(_write_batches, "n long, n_err long")
-        .agg(F.sum("n").alias("n"), F.sum("n_err").alias("n_err"))
-        .first()
-    )
-    return int(counts.n or 0)
+
+def _write_bson(out_dir: str, fname: str, js) -> None:
+    from sql_cdc_spark.functions import bsoncodec
+
+    fname = fname.removesuffix(".json") + ".bson"
+    data = bsoncodec.encode_document(json.loads(js))
+    _atomic_write(os.path.join(out_dir, fname), data, mode="wb")
+
+
+def _local_docs(docs: DataFrame):
+    """A documents frame's ``(doc_filename, doc_json)`` pairs, streamed to
+    the driver one partition at a time."""
+    return docs.select("doc_filename", "doc_json").toLocalIterator()
 
 
 def write_documents(
     docs: DataFrame, out_dir: str, error_dir: str | None = None
 ) -> int:
-    """Per-record document sink, partition-parallel over Arrow batches.
+    """Per-record JSON document sink, written from the driver.
     Deterministic filenames make re-writes idempotent (at-least-once
     delivery upgraded to effectively-exactly-once, SURVEY.md §7 hard-part
     1). With ``error_dir``, per-record failures are segregated there and
@@ -222,11 +290,7 @@ def write_documents(
     the full batch — an errored record is consumed, its evidence parked
     for operator replay. Returns the number of documents DELIVERED
     (excluding segregated errors)."""
-
-    def _write_one(fname: str, js) -> None:
-        _atomic_write(os.path.join(out_dir, fname), js)
-
-    return _per_record_sink(docs, out_dir, error_dir, _write_one)
+    return _deliver(_local_docs(docs), out_dir, error_dir, _write_json)
 
 
 def write_documents_partitioned(docs: DataFrame, out_dir: str, batch_id: int) -> int:
@@ -235,11 +299,16 @@ def write_documents_partitioned(docs: DataFrame, out_dir: str, batch_id: int) ->
     rewrites the same directory, so delivery is idempotent without
     per-record filenames. This is the 100 TB path (bounded file count,
     partition-parallel, no per-row driver work); the per-record sink above
-    is the strict reference-parity mode."""
+    is the strict reference-parity mode. The document count rides the
+    write job (an Observation), so the batch is evaluated once."""
+    from pyspark.sql import Observation
+
     path = os.path.join(out_dir, f"batch_id={int(batch_id)}")
-    payload = docs.select("doc_filename", "doc_json")
-    payload.write.mode("overwrite").json(path)
-    return payload.count()
+    obs = Observation("partitioned_docs")
+    docs.select("doc_filename", "doc_json").observe(
+        obs, F.count(F.lit(1)).alias("n")
+    ).write.mode("overwrite").json(path)
+    return int(obs.get["n"])
 
 
 class StaleCursorError(RuntimeError):
@@ -311,62 +380,46 @@ def pull_batch(
         to_version = cl.current_version(spark, log_dir)
         changes = cl.read_changelog(spark, log_dir)
     # inclusive re-read of the cursor version (ties may straddle a batch
-    # boundary), snapshot-bounded above
-    changes = changes.filter(
-        (F.col("change_version") >= state.last_sync_version)
-        & (F.col("change_version") <= to_version)
-    )
-    changed = _changed_invoices(changes, lines, model)
-    latest = _latest_with_op(changed)
-    # keyset filter on the COLLAPSED stream: strictly after the cursor
-    resumable = cdc.keyset_filter(
-        latest,
-        state.last_sync_version,
-        state.last_processed_id,
-        version_col="change_version",
-        key_col="invoice_id",
-    )
-    batch = cdc.bounded_ordered_batch(
-        resumable, limit, "change_version", "invoice_id"
-    )
-    # The cursor advances over the PRE-JOIN batch: a batched key with no
-    # header row (deleted invoice, op='D') produces no document, but it is
-    # still consumed — otherwise a log tail of dropped keys would never
-    # advance the cursor and every future poll would re-scan it forever.
-    # has_more likewise derives from the pre-join count, so a batch made
-    # entirely of dropped keys keeps drain() moving. (The reference sproc
-    # limits AFTER joining InvoiceHeader, sqls/storedprocedure.sql:35,55-56,
-    # so its deleted keys never enter the batch; advancing past them here
-    # is the equivalent no-starvation guarantee.)
-    batch = batch.cache()
-    batch_rows = batch.select("invoice_id", "change_version").orderBy(
-        "change_version", "invoice_id"
-    ).collect()
+    # boundary), snapshot-bounded above; one action brings the batch's
+    # rows — documents included — to the driver
+    docs = _documents(spark, model, changes, header, lines, {
+        "from_version": state.last_sync_version, "to_version": to_version,
+        "cursor_version": state.last_sync_version,
+        "cursor_id": state.last_processed_id, "limit": limit,
+    })
+    rows = docs.toArrow().to_pylist()
     stage_ms["query"] = (time.time() - t1) * 1000
 
-    batch_count = len(batch_rows)
-    if batch_count == 0:
-        batch.unpersist()
+    if not rows:
         return BatchResult(
             consumer, state.last_sync_version, to_version, 0, False,
             state.last_sync_version, state.last_processed_id, stage_ms,
         )
-
-    docs = _assemble(header, lines, batch, model)
-    t2 = time.time()
     if fail_sink:
-        batch.unpersist()
         raise OSError("injected sink failure")
-    written = write_documents(docs, out_dir, error_dir)
+
+    t2 = time.time()
+    written = _deliver(
+        ((r["doc_filename"], r["doc_json"]) for r in rows if r["doc_filename"] is not None),
+        out_dir, error_dir, _write_json,
+    )
     stage_ms["sink"] = (time.time() - t2) * 1000
 
-    # advance to the LAST row of the version-ordered pre-join batch
-    # (server.js:235-249) — only reached when the sink succeeded
+    # The cursor advances over the WHOLE batch: a batched key with no
+    # header row (deleted invoice, op='D') produces no document, but it is
+    # still consumed — otherwise a log tail of dropped keys would never
+    # advance the cursor and every future poll would re-scan it forever.
+    # has_more likewise counts every batched key, so a batch made entirely
+    # of dropped keys keeps drain() moving. (The reference sproc limits
+    # AFTER joining InvoiceHeader, sqls/storedprocedure.sql:35,55-56, so
+    # its deleted keys never enter the batch; advancing past them here is
+    # the equivalent no-starvation guarantee.) Advance to the batch's last
+    # (version, key) (server.js:235-249) — only reached when the sink
+    # succeeded.
     t3 = time.time()
-    last = batch_rows[-1]
-    registry.advance(consumer, last.change_version, last.invoice_id)
+    last_version, last_id = max((r["change_version"], r["invoice_id"]) for r in rows)
+    registry.advance(consumer, last_version, last_id)
     stage_ms["update_state"] = (time.time() - t3) * 1000
-    batch.unpersist()
 
     total_s = time.time() - t0
     return BatchResult(
@@ -374,9 +427,9 @@ def pull_batch(
         from_version=state.last_sync_version,
         to_version=to_version,
         processed=written,
-        has_more=batch_count == limit,
-        last_version=last.change_version,
-        last_id=last.invoice_id,
+        has_more=len(rows) == limit,
+        last_version=last_version,
+        last_id=last_id,
         stage_ms=stage_ms,
         docs_per_second=written / total_s if total_s > 0 else 0.0,
     )
@@ -433,35 +486,61 @@ def run_available_now(
 
     ``doc_format="bson"`` writes reference-parity .bson files
     (invoice-api/server.js:62-80) through the same idempotent sink.
+
+    A stream still running after ``timeout_s`` is stopped and
+    ``TimeoutError`` raised; its checkpoint resumes it on the next call.
     """
     if doc_format not in ("json", "bson"):
         raise ValueError(f"doc_format must be 'json' or 'bson', got {doc_format!r}")
     stream = cl.read_changelog_stream(spark, log_dir, max_files_per_trigger)
     metrics: dict = {"batches": 0, "documents": 0}
-    sink = write_documents_bson if doc_format == "bson" else write_documents
+    write_one = _write_bson if doc_format == "bson" else _write_json
+    # A micro-batch runs in the stream's own session, cloned at start():
+    # header and lines reach it as temp views registered before start.
+    views = {k: f"_cdc_{k}_{uuid.uuid4().hex}" for k in ("header", "lines")}
+    header.createOrReplaceTempView(views["header"])
+    lines.createOrReplaceTempView(views["lines"])
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        changed = _changed_invoices(batch_df, lines, model)
-        latest = _latest_with_op(changed)
-        docs = _assemble(header, lines, latest, model)
-        n = sink(docs, out_dir, error_dir)
+        session = batch_df.sparkSession
+        docs = _documents(session, model, batch_df, session.table(views["header"]),
+                          session.table(views["lines"]))
+        last = (0, 0)
+
+        def _rows():
+            # one pass over the batch's rows: documents to the sink, every
+            # key (header-less ones too) to the cursor
+            nonlocal last
+            for r in docs.toLocalIterator():
+                last = max(last, (r.change_version, r.invoice_id))
+                if r.doc_filename is not None:
+                    yield r.doc_filename, r.doc_json
+
+        n = _deliver(_rows(), out_dir, error_dir, write_one)
         metrics["batches"] += 1
         metrics["documents"] += n
         if registry is not None and n > 0:
-            row = latest.agg(
-                F.max(F.struct("change_version", "invoice_id")).alias("m")
-            ).first()
-            if row and row.m is not None:
-                registry.advance(consumer, row.m.change_version, row.m.invoice_id)
+            registry.advance(consumer, *last)
 
     checkpoint = os.path.join(checkpoint_root, consumer)
-    query = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_s)
+    try:
+        query = (
+            stream.writeStream.foreachBatch(_process)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not query.awaitTermination(timeout_s):
+            # a query left running would keep writing after the caller
+            # moved on; the checkpoint resumes where this one was cut off
+            query.stop()
+            raise TimeoutError(
+                f"stream for consumer {consumer!r} exceeded {timeout_s}s after "
+                f"{metrics['batches']} batches; checkpoint {checkpoint} resumes it"
+            )
+    finally:
+        for name in views.values():
+            spark.catalog.dropTempView(name)
     progress = query.lastProgress
     if progress:
         metrics["last_progress"] = {
@@ -733,13 +812,5 @@ def write_documents_bson(
     BSON.serialize would produce for the same JSON. Same idempotent
     deterministic-filename and error-segregation contract as
     write_documents (a record whose JSON parse or BSON encode fails is a
-    poison record too); the encode runs inside the Arrow batch loop, so
-    it is partition-parallel and never touches the driver."""
-    from sql_cdc_spark.functions import bsoncodec
-
-    def _write_one(fname: str, js) -> None:
-        fname = fname.removesuffix(".json") + ".bson"
-        data = bsoncodec.encode_document(json.loads(js))
-        _atomic_write(os.path.join(out_dir, fname), data, mode="wb")
-
-    return _per_record_sink(docs, out_dir, error_dir, _write_one)
+    poison record too)."""
+    return _deliver(_local_docs(docs), out_dir, error_dir, _write_bson)

@@ -10,6 +10,7 @@ import os
 import duckdb
 import pytest
 
+from sql_cdc_spark import tables
 from sql_cdc_spark.session import get_spark
 from sql_cdc_spark.tables import TABLE_NAMES
 
@@ -21,6 +22,14 @@ SF_DIR_SMALL = "/root/testdata/sf0.001"
 def spark():
     s = get_spark("sql-cdc-spark-tests")
     yield s
+
+
+@pytest.fixture()
+def base(spark):
+    """The CDC pipeline tests' header and line tables."""
+    header = tables.load(spark, SF_DIR_SMALL, "orders")
+    lines = tables.load(spark, SF_DIR_SMALL, "lineitem")
+    return header, lines
 
 
 @pytest.fixture(scope="session")

@@ -1,9 +1,8 @@
-"""CDC pipeline tests (SURVEY.md §5 items 2-3): end-to-end document
-emission vs a dedup-join-nest oracle, resume after failure, no-loss/no-dup
-across arbitrary batch boundaries, multi-consumer independence, reset,
-and the Structured Streaming availableNow runner."""
+"""CDC pipeline tests (SURVEY.md §5 items 2-3), slow tier: multi-consumer
+independence, reset, the document sinks and listings, retention, the
+streaming maintenance twins and the source shapes feeding the pipeline.
+The core-tier pull and availableNow tests live in test_pull.py."""
 
-import json
 import os
 import random
 
@@ -18,153 +17,8 @@ from sql_cdc_spark import tables
 from sql_cdc_spark.streaming import changelog as cl
 from sql_cdc_spark.streaming import pipeline as pl
 from sql_cdc_spark.streaming.registry import SyncStateRegistry
+from tests.cdc_support import MODEL, _gen_changes, _oracle_latest
 from tests.conftest import SF_DIR_SMALL
-
-MODEL = pl.InvoiceModel(
-    header_key="o_orderkey",
-    line_key_expr="l_orderkey * 8 + l_linenumber",
-    line_parent_key="l_orderkey",
-    header_cols=["o_custkey", "o_totalprice"],
-    line_cols=["l_linenumber", "l_quantity", "l_extendedprice"],
-    line_order_col="l_linenumber",
-)
-
-
-@pytest.fixture()
-def base(spark):
-    header = tables.load(spark, SF_DIR_SMALL, "orders")
-    lines = tables.load(spark, SF_DIR_SMALL, "lineitem")
-    return header, lines
-
-
-def _gen_changes(spark, tmp_path, n_rounds=3, keys=range(0, 40), seed=7):
-    """Change log with header changes, line changes, repeats (multiple
-    versions per key), and tie batches."""
-    w = cl.ChangeLogWriter(spark, str(tmp_path / "changelog"), seed=seed)
-    rng = random.Random(seed)
-    expected_latest = {}  # invoice -> version
-    for _ in range(n_rounds):
-        rows = []
-        for k in keys:
-            if rng.random() < 0.5:
-                rows.append((cl.HEADER_TABLE, k, rng.choice("IU")))
-            if rng.random() < 0.5:
-                ln = rng.randint(1, 7)
-                rows.append((cl.LINE_TABLE, k * 8 + ln, "U"))
-        rng.shuffle(rows)
-        w.append(rows)
-        # tie batch: several invoices share one version
-        tie_keys = rng.sample(list(keys), 5)
-        w.append_with_ties([(cl.HEADER_TABLE, k, "U") for k in tie_keys])
-    return w
-
-
-def _oracle_latest(spark, log_dir, lines):
-    """Brute-force oracle: latest (version, op) per invoice from the raw
-    log, with line changes mapped through the base line table."""
-    changes = cl.read_changelog(spark, log_dir)
-    changed = pl._changed_invoices(changes, lines, MODEL)
-    rows = changed.collect()
-    latest = {}
-    for r in rows:
-        cur = latest.get(r.invoice_id)
-        if cur is None or (r.change_version, r.op) > cur:
-            latest[r.invoice_id] = (r.change_version, r.op)
-    return latest
-
-
-def test_pull_batch_matches_oracle(spark, base, tmp_path):
-    header, lines = base
-    w = _gen_changes(spark, tmp_path)
-    out_dir = str(tmp_path / "docs")
-    reg = SyncStateRegistry(str(tmp_path / "state"))
-
-    results = pl.drain(
-        spark, w.log_dir, "c1", reg, header, lines, MODEL, out_dir, limit=10
-    )
-    assert results[-1].has_more is False
-
-    oracle = _oracle_latest(spark, w.log_dir, lines)
-    # only invoices present in the header base table are emitted (inner join)
-    present = {
-        r.o_orderkey for r in header.select("o_orderkey").collect()
-    }
-    expected = {k: v for k, v in oracle.items() if k in present}
-
-    files = [f for f in os.listdir(out_dir) if f.endswith(".json")]
-    emitted = {}
-    for f in files:
-        inv, ver = f[:-5].split("_v")
-        emitted[int(inv)] = int(ver)
-    assert emitted == {k: v for k, (v, _op) in expected.items()}
-
-    # document content: nested lines sorted by line number, valid JSON
-    doc = pl.read_document(out_dir, files[0])
-    assert {"invoice_id", "change_version", "op", "lines"} <= doc.keys()
-    lns = [l["l_linenumber"] for l in doc["lines"]]
-    assert lns == sorted(lns)
-
-
-def test_no_loss_no_dup_across_batch_boundaries(spark, base, tmp_path):
-    """Property (T4): any batch-size sequence delivers each changed invoice
-    exactly once, including under version ties straddling boundaries."""
-    header, lines = base
-    w = _gen_changes(spark, tmp_path, n_rounds=2, keys=range(0, 30), seed=11)
-    reg = SyncStateRegistry(str(tmp_path / "state"))
-    out_dir = str(tmp_path / "docs")
-
-    seen = []
-    rng = random.Random(3)
-    while True:
-        limit = rng.choice([1, 2, 3, 7])
-        res = pl.pull_batch(
-            spark, w.log_dir, "c", reg, header, lines, MODEL, out_dir, limit=limit
-        )
-        files = {f for f in os.listdir(out_dir)}
-        seen.append((res.processed, res.last_version, res.last_id))
-        if not res.has_more and res.processed < limit:
-            break
-
-    oracle = _oracle_latest(spark, w.log_dir, lines)
-    present = {r.o_orderkey for r in header.select("o_orderkey").collect()}
-    expected_n = len([k for k in oracle if k in present])
-    total = sum(p for p, _, _ in seen)
-    assert total == expected_n, f"delivered {total}, expected {expected_n}"
-    # cursor monotonicity
-    cursors = [(v, i) for _, v, i in seen]
-    assert cursors == sorted(cursors)
-
-
-def test_resume_after_sink_failure(spark, base, tmp_path):
-    """T3: injected sink failure must NOT advance the cursor; the retry
-    delivers the same batch (idempotent filenames absorb any re-writes)."""
-    header, lines = base
-    w = _gen_changes(spark, tmp_path, n_rounds=1, keys=range(0, 10), seed=5)
-    reg = SyncStateRegistry(str(tmp_path / "state"))
-    out_dir = str(tmp_path / "docs")
-
-    before = reg.read("c")
-    with pytest.raises(OSError):
-        pl.pull_batch(
-            spark, w.log_dir, "c", reg, header, lines, MODEL, out_dir,
-            limit=5, fail_sink=True,
-        )
-    after_fail = reg.read("c")
-    assert (after_fail.last_sync_version, after_fail.last_processed_id) == (
-        before.last_sync_version,
-        before.last_processed_id,
-    )
-    assert not os.path.exists(out_dir) or not os.listdir(out_dir)
-
-    res = pl.pull_batch(
-        spark, w.log_dir, "c", reg, header, lines, MODEL, out_dir, limit=5
-    )
-    assert res.processed > 0
-    after = reg.read("c")
-    assert (after.last_sync_version, after.last_processed_id) == (
-        res.last_version,
-        res.last_id,
-    )
 
 
 def test_multi_consumer_independence_and_reset(spark, base, tmp_path):
@@ -191,48 +45,6 @@ def test_multi_consumer_independence_and_reset(spark, base, tmp_path):
         reg.advance("b", 0, 0)
 
 
-def test_empty_pull_does_not_advance(spark, base, tmp_path):
-    header, lines = base
-    w = cl.ChangeLogWriter(spark, str(tmp_path / "changelog"))
-    w.append([(cl.HEADER_TABLE, 1, "I")])
-    reg = SyncStateRegistry(str(tmp_path / "state"))
-    out = str(tmp_path / "docs")
-    r1 = pl.pull_batch(spark, w.log_dir, "c", reg, header, lines, MODEL, out, limit=10)
-    assert r1.processed == 1
-    r2 = pl.pull_batch(spark, w.log_dir, "c", reg, header, lines, MODEL, out, limit=10)
-    assert r2.processed == 0 and r2.has_more is False
-    assert reg.read("c").last_sync_version == r1.last_version
-
-
-def test_streaming_available_now_and_incremental_resume(spark, base, tmp_path):
-    """Structured Streaming runner: first drain processes everything; a
-    second run with the same checkpoint only sees newly appended files."""
-    header, lines = base
-    w = _gen_changes(spark, tmp_path, n_rounds=1, keys=range(0, 15), seed=13)
-    out_dir = str(tmp_path / "docs")
-    chk = str(tmp_path / "chk")
-
-    m1 = pl.run_available_now(
-        spark, w.log_dir, "s1", header, lines, MODEL, out_dir, chk
-    )
-    assert m1["documents"] > 0
-    n_files_1 = len(os.listdir(out_dir))
-
-    # no new data -> no new documents
-    m2 = pl.run_available_now(
-        spark, w.log_dir, "s1", header, lines, MODEL, out_dir, chk
-    )
-    assert m2["documents"] == 0
-
-    # append a change for a fresh key; only it is processed
-    w.append([(cl.HEADER_TABLE, 55, "U")])
-    m3 = pl.run_available_now(
-        spark, w.log_dir, "s1", header, lines, MODEL, out_dir, chk
-    )
-    assert m3["documents"] == 1
-    assert len(os.listdir(out_dir)) == n_files_1 + 1
-
-
 def test_document_listing_source(spark, base, tmp_path):
     """S7: binaryFile listing of the sink directory, newest first."""
     header, lines = base
@@ -252,9 +64,9 @@ def test_partitioned_sink_idempotent_replay(spark, base, tmp_path):
     header, lines = base
     w = _gen_changes(spark, tmp_path, n_rounds=1, keys=range(0, 10), seed=33)
     changes = cl.read_changelog(spark, w.log_dir)
-    changed = pl._changed_invoices(changes, lines, MODEL)
-    latest = pl._latest_with_op(changed)
-    docs = pl._assemble(header, lines, latest, MODEL)
+    docs = pl._documents(spark, MODEL, changes, header, lines).filter(
+        "doc_filename IS NOT NULL"
+    )
     out = str(tmp_path / "pdocs")
 
     n1 = pl.write_documents_partitioned(docs, out, batch_id=7)
@@ -415,35 +227,6 @@ def test_poll_loop_drains_and_retries(spark, base, tmp_path):
         limit=5, interval_s=1.0, max_polls=1, sleep=slept.append,
     )
     assert sum(r.processed for r in r2) == 1
-
-
-def test_header_missing_keys_do_not_stall_or_starve(spark, base, tmp_path):
-    """Regression (round-2 verdict #1): batched keys absent from the header
-    (deleted invoices) must neither starve later deliverable keys nor leave
-    the cursor stuck re-scanning an all-dropped log tail. The cursor
-    advances over the PRE-JOIN batch; has_more derives from its count."""
-    header, lines = base
-    present = [r.o_orderkey for r in header.select("o_orderkey").orderBy("o_orderkey").limit(4).collect()]
-    w = cl.ChangeLogWriter(spark, str(tmp_path / "changelog"))
-    # low versions: keys with NO header row — every small batch hits them first
-    w.append([(cl.HEADER_TABLE, 990000 + i, "D") for i in range(6)])
-    # middle: deliverable keys
-    w.append([(cl.HEADER_TABLE, k, "U") for k in present])
-    # tail: all-missing again (the permanent-re-scan case)
-    w.append([(cl.HEADER_TABLE, 990100 + i, "D") for i in range(4)])
-
-    reg = SyncStateRegistry(str(tmp_path / "state"))
-    out = str(tmp_path / "docs")
-    results = pl.drain(spark, w.log_dir, "c", reg, header, lines, MODEL, out, limit=3)
-
-    delivered = {int(f.split("_v")[0]) for f in os.listdir(out)}
-    assert delivered == set(present), "dropped keys ate batch slots"
-    # the cursor sits at the global high-watermark: the all-missing tail was
-    # consumed, so the next pull is empty and re-scans nothing
-    hw = cl.current_version(spark, w.log_dir)
-    assert reg.read("c").last_sync_version == hw
-    res = pl.pull_batch(spark, w.log_dir, "c", reg, header, lines, MODEL, out, limit=3)
-    assert res.processed == 0 and res.has_more is False
 
 
 def test_expire_changelog_stages_on_same_filesystem(spark, base, tmp_path, monkeypatch):
@@ -681,63 +464,6 @@ def test_streaming_rollup_maintenance(spark, base, tmp_path):
         map(tuple, base_small.groupBy("o_custkey").agg(*exprs).collect())
     )
     assert got == want
-
-
-def test_poison_record_segregated_batch_continues(spark, base, tmp_path, monkeypatch):
-    """Failed-document segregation (invoice-api/server.js:33-42,183-203):
-    with error_dir set, a poison record lands in the error directory, the
-    other N−1 documents are delivered, the cursor advances over the FULL
-    batch, and the next pull is empty (clean resume)."""
-    header, lines = base
-    w = _gen_changes(spark, tmp_path, n_rounds=1, keys=range(0, 10), seed=5)
-    reg = SyncStateRegistry(str(tmp_path / "state"))
-    out_dir = str(tmp_path / "docs")
-    err_dir = str(tmp_path / "errors")
-
-    oracle = _oracle_latest(spark, w.log_dir, lines)
-    present = {r.o_orderkey for r in header.select("o_orderkey").collect()}
-    keys = sorted(k for k in oracle if k in present)
-    poison_id, expected_n = keys[0], len(keys)
-    assert expected_n >= 2
-
-    real_assemble = pl._assemble
-
-    def poisoned(h, l, latest, model):
-        docs = real_assemble(h, l, latest, model)
-        return docs.withColumn(
-            "doc_json",
-            F.when(F.col("invoice_id") == poison_id, F.lit(None).cast("string"))
-            .otherwise(F.col("doc_json")),
-        )
-
-    monkeypatch.setattr(pl, "_assemble", poisoned)
-    res = pl.pull_batch(
-        spark, w.log_dir, "c", reg, header, lines, MODEL, out_dir,
-        limit=1000, error_dir=err_dir,
-    )
-    assert res.processed == expected_n - 1
-    delivered = [f for f in os.listdir(out_dir) if f.endswith(".json")]
-    assert len(delivered) == expected_n - 1
-    assert not any(f.startswith(f"{poison_id}_v") for f in delivered)
-    errs = os.listdir(err_dir)
-    assert len(errs) == 1
-    assert errs[0].startswith(f"{poison_id}_v") and errs[0].endswith(".error")
-    with open(os.path.join(err_dir, errs[0])) as f:
-        err_doc = json.load(f)
-    assert err_doc["doc_filename"].startswith(f"{poison_id}_v")
-    assert "TypeError" in err_doc["error"] or "Error" in err_doc["error"]
-    # cursor advanced over the whole batch — the poison record is consumed
-    after = reg.read("c")
-    assert (after.last_sync_version, after.last_processed_id) == (
-        res.last_version, res.last_id,
-    )
-    # clean resume: nothing left to pull
-    monkeypatch.setattr(pl, "_assemble", real_assemble)
-    res2 = pl.pull_batch(
-        spark, w.log_dir, "c", reg, header, lines, MODEL, out_dir,
-        limit=1000, error_dir=err_dir,
-    )
-    assert res2.processed == 0 and res2.has_more is False
 
 
 def test_poison_record_without_error_dir_fails_batch(spark, tmp_path):
@@ -2176,51 +1902,6 @@ def test_malformed_filename_poison_segregates_not_crashes(spark, tmp_path):
     assert {r["payload"] for r in recs} == {'{"a":2}', '{"a":4}'}
 
 
-def test_stale_cursor_refused_after_retention(spark, base, tmp_path):
-    """The min-valid-version contract: after expire_changelog raises the
-    retention floor past a consumer's cursor, pull_batch REFUSES the pull
-    (StaleCursorError) instead of silently skipping the expired changes;
-    consumer_lag flags the same consumer stale; reset_consumer restores a
-    working (from-scratch) pull. A consumer already past the floor is
-    untouched."""
-    header, lines = base
-    w = _gen_changes(spark, tmp_path)
-    log = w.log_dir
-    reg = SyncStateRegistry(str(tmp_path / "sreg"))
-    out = str(tmp_path / "sdocs")
-
-    # behind: consumed a little; ahead: fully drained
-    r1 = pl.pull_batch(spark, log, "behind", reg, header, lines, MODEL, out, limit=5)
-    assert r1.processed > 0
-    pl.drain(spark, log, "ahead", reg, header, lines, MODEL, out, limit=500)
-    behind_v = reg.read("behind").last_sync_version
-    ahead_v = reg.read("ahead").last_sync_version
-    assert behind_v < ahead_v
-
-    floor = behind_v + 1
-    pl.expire_changelog(spark, log, min_version=floor)
-    assert cl.retention_floor(log) == floor
-
-    with pytest.raises(pl.StaleCursorError, match="behind"):
-        pl.pull_batch(spark, log, "behind", reg, header, lines, MODEL, out)
-    stale = {
-        r.sync_name: r.cursor_stale
-        for r in pl.consumer_lag(spark, reg, log).collect()
-    }
-    assert stale["behind"] is True and stale["ahead"] is False
-
-    # ahead consumer still pulls fine (nothing pending, no error)
-    ok = pl.pull_batch(spark, log, "ahead", reg, header, lines, MODEL, out)
-    assert ok.processed == 0
-
-    # reset, then... a reset cursor is version 0 < floor: the contract is
-    # re-sync from a base snapshot; incremental pull over the expired
-    # range must STILL be refused so loss cannot sneak back in
-    pl.reset_consumer(reg, str(tmp_path / "schk"), "behind")
-    with pytest.raises(pl.StaleCursorError):
-        pl.pull_batch(spark, log, "behind", reg, header, lines, MODEL, out)
-
-
 def test_expiration_invisible_to_valid_consumers(spark, base, tmp_path):
     """Retention safety from the other side: for a consumer whose cursor
     is AT or ABOVE the floor, expiring the log changes nothing — the
@@ -2390,21 +2071,6 @@ def test_read_violations_propagates_corrupt_evidence(spark, tmp_path):
     (vdir / "part-00000.snappy.parquet").write_bytes(b"not a parquet file")
     with _pytest.raises(Exception):
         EX.read_violations(spark, str(tmp_path / "viol")).collect()
-
-
-def test_pull_batch_cold_start_empty_log(spark, base, tmp_path):
-    """A consumer polling before the producer has written any change gets
-    an empty batch at version 0, not PATH_NOT_FOUND — and the cursor
-    stays at the origin so the first real change is picked up later."""
-    header, lines = base
-    reg = SyncStateRegistry(str(tmp_path / "coldreg"))
-    res = pl.pull_batch(
-        spark, str(tmp_path / "cold_log"), "c", reg, header, lines, MODEL,
-        str(tmp_path / "cold_docs"),
-    )
-    assert res.processed == 0 and res.has_more is False
-    st = reg.read("c")
-    assert (st.last_sync_version, st.last_processed_id) == (0, 0)
 
 
 def test_jdbc_registry_full_pipeline_parity(spark, base, tmp_path):

@@ -375,9 +375,8 @@ def stress_100x(spark, sf_dir: str) -> dict:
         out["apply_100x_probe_ms"] = probe
         out["apply_100x_probe_wide_ms"] = _cpu_probe_wide_ms()
     finally:
-        if new_state is not None:
-            new_state.release()
-        state.release()
+        DD.release_local_checkpoint(new_state)
+        DD.release_local_checkpoint(state)
 
     # vectors side: the bucketed k-NN self-join and the SemDeDup election
     # at 100× vectors, bits scaled with the corpus (≈ log2(N / target
@@ -647,6 +646,7 @@ def retrieval_10x_stress(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     from sql_cdc_spark import tables
+    from sql_cdc_spark.functions.dedup import release_local_checkpoint
     from sql_cdc_spark.queries.text_q import BM25_QUERY, bm25_search
     from sql_cdc_spark.streaming.search_maintenance import (
         apply_search_changes,
@@ -685,10 +685,8 @@ def retrieval_10x_stress(spark, sf_dir: str) -> dict:
         out["query_rows"] = score_query(state2, BM25_QUERY, k=10).count()
         out["query_seconds"] = round(perf_counter() - t0, 3)
     finally:
-        if state2 is not None:
-            state2.release()
-        if state is not None:
-            state.release()
+        release_local_checkpoint(state2)
+        release_local_checkpoint(state)
         tenx.unpersist()
     return out
 
@@ -911,11 +909,11 @@ def incremental_apply_scaling(spark, sf_dir: str) -> dict:
             )
             n_pairs = new_state.pairs.count()
             best = min(best, perf_counter() - t0)
-            new_state.release()
+            DD.release_local_checkpoint(new_state)
         out[f"apply_seconds_{tag}"] = round(best, 3)
         out[f"pairs_{tag}"] = n_pairs
         out[f"probe_ms_{tag}"] = probes
-        state.release()
+        DD.release_local_checkpoint(state)
     out["ratio_10x_over_1x"] = round(
         out["apply_seconds_10x"] / max(out["apply_seconds_1x"], 1e-9), 2
     )

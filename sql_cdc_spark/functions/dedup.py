@@ -729,8 +729,11 @@ def duplicate_spans(
     )
 
 
-def release_local_checkpoint(df: DataFrame) -> None:
-    """Free the executor blocks behind a localCheckpoint-ed DataFrame.
+def release_local_checkpoint(state) -> None:
+    """Free the executor blocks behind every localCheckpoint-ed DataFrame
+    in ``state``: a DataFrame, or a (Named)tuple of them nested to any
+    depth — every maintenance state is one. Any other value (ints,
+    models, dicts, None) is ignored, so one call frees any state.
 
     ``DataFrame.unpersist()`` cannot do this — localCheckpoint data lives
     as a persisted RDD inside the plan's LogicalRDD node, not in the SQL
@@ -740,12 +743,18 @@ def release_local_checkpoint(df: DataFrame) -> None:
     ONLY call on snapshots nothing will read again: the lineage is
     truncated, so a released checkpoint cannot recompute. No-op when the
     frame isn't checkpoint-backed or the py4j plan shape changes."""
+    if isinstance(state, tuple):
+        for part in state:
+            release_local_checkpoint(part)
+        return
+    if not isinstance(state, DataFrame):
+        return
     try:
-        rid = int(df._jdf.queryExecution().analyzed().rdd().id())
+        rid = int(state._jdf.queryExecution().analyzed().rdd().id())
     except Exception:
         return
     try:
-        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rid, False)
+        state.sparkSession.sparkContext._jsc.sc().unpersistRDD(rid, False)
     except Exception:
         pass
 
@@ -763,16 +772,6 @@ class NearDupState(NamedTuple):
     banded: DataFrame        # (doc_id, bkey) LSH band membership
     bucket_sizes: DataFrame  # (bkey, bsz) — members per band bucket
     pairs: DataFrame         # (id_a, id_b, jaccard) verified near-dups
-
-    def release(self, keep_pairs: bool = False) -> None:
-        """Free this state's checkpoint blocks — for a state superseded
-        by a newer one, or (``keep_pairs=True``) for the four non-result
-        tables once only the pair set is still needed."""
-        frames = [self.shingles, self.sigs, self.banded, self.bucket_sizes]
-        if not keep_pairs:
-            frames.append(self.pairs)
-        for df in frames:
-            release_local_checkpoint(df)
 
 
 def _ckpt(df: DataFrame, enabled: bool) -> DataFrame:
@@ -997,13 +996,6 @@ class ContainmentState(NamedTuple):
     dfreq: DataFrame     # (sh64, df) corpus-wide document frequency
     sizes: DataFrame     # (doc_id, n_rare) rare-domain set size
     pairs: DataFrame     # (id_a, id_b, n_a, n_b, containment) ≥ threshold
-
-    def release(self, keep_pairs: bool = False) -> None:
-        frames = [self.shingles, self.dfreq, self.sizes]
-        if not keep_pairs:
-            frames.append(self.pairs)
-        for df in frames:
-            release_local_checkpoint(df)
 
 
 def build_containment_state(

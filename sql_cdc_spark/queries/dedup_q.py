@@ -523,8 +523,8 @@ def dd_incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the new state is materialized; free the superseded base state and
     # the non-result tables so back-to-back driver queries don't stack
     # checkpoint blocks — only the returned pair snapshot stays alive
-    state.release()
-    new_state.release(keep_pairs=True)
+    DD.release_local_checkpoint(state)
+    DD.release_local_checkpoint(new_state._replace(pairs=None))
     return new_state.pairs.orderBy("id_a", "id_b")
 
 
@@ -711,8 +711,8 @@ def dd_incremental_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         df_cap=CONTAINMENT_DF_CAP,
         threshold=CONTAINMENT_THRESHOLD,
     )
-    state.release()
-    new_state.release(keep_pairs=True)
+    DD.release_local_checkpoint(state)
+    DD.release_local_checkpoint(new_state._replace(pairs=None))
     return new_state.pairs.orderBy("id_a", "id_b")
 
 

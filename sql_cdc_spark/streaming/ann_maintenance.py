@@ -35,20 +35,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.functions.similarity import as_double_array, ivf_assign
 from sql_cdc_spark.streaming import feed as FEED
 
 CHANGE_SCHEMA = (
     "vec_id long, embedding array<float>, op string, change_version long"
 )
-
-
-def read_embedding_changes(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming source over a parquet embedding-change feed."""
-    return FEED.read_feed(spark, feed_dir, CHANGE_SCHEMA, max_files_per_trigger)
 
 
 def collapse_batch(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -133,12 +125,12 @@ def run_ann_maintenance(
     RELEASED as it is superseded — callers must not reuse the passed-in
     frame after this returns. The returned postings are live and
     caller-owned."""
-    def _apply(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    def _apply(prev: DataFrame, batch_df: DataFrame, _batch_id: int) -> DataFrame:
         upserts, deletes = collapse_batch(batch_df)
         return apply_postings_changes(prev, upserts, deletes, model)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial_postings,
-        _apply, release_local_checkpoint,
+        _apply,
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

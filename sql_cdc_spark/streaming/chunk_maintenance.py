@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions import text as TX
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.dedup_maintenance import (
     CHANGE_SCHEMA,
@@ -51,9 +50,6 @@ class ChunkState(NamedTuple):
     chunk_len, chunk_digest)."""
 
     chunks: DataFrame
-
-    def release(self) -> None:
-        release_local_checkpoint(self.chunks)
 
 
 _ckpt = FEED.ckpt
@@ -102,12 +98,11 @@ def run_chunk_maintenance(
     ``initial`` and every superseded state are released; the returned
     state is live and caller-owned."""
 
-    def _apply(prev: ChunkState, batch_df: DataFrame) -> ChunkState:
+    def _apply(prev: ChunkState, batch_df: DataFrame, _batch_id: int) -> ChunkState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_chunk_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

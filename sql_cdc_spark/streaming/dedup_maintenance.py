@@ -31,19 +31,11 @@ which at cluster scale is an incremental parquet/Delta write.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions import dedup as DD
 from sql_cdc_spark.streaming import feed as FEED
 
 CHANGE_SCHEMA = "doc_id long, text string, op string, change_version long"
-
-
-def read_document_changes(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming source over a parquet document-change feed."""
-    return FEED.read_feed(spark, feed_dir, CHANGE_SCHEMA, max_files_per_trigger)
 
 
 def collapse_batch(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -70,7 +62,9 @@ def run_dedup_maintenance(
     it is superseded — callers must not reuse the passed-in state after
     this returns. The returned state is live and caller-owned.
     """
-    def _apply(prev: DD.NearDupState, batch_df: DataFrame) -> DD.NearDupState:
+    def _apply(
+        prev: DD.NearDupState, batch_df: DataFrame, _batch_id: int
+    ) -> DD.NearDupState:
         upserts, deletes = collapse_batch(batch_df)
         return DD.apply_near_dup_changes(
             prev,
@@ -82,7 +76,6 @@ def run_dedup_maintenance(
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )
 
@@ -105,7 +98,9 @@ def run_containment_maintenance(
     batch can cause for documents it never touched. Same ownership
     contract: superseded states are released, the returned state is
     live and caller-owned."""
-    def _apply(prev: DD.ContainmentState, batch_df: DataFrame) -> DD.ContainmentState:
+    def _apply(
+        prev: DD.ContainmentState, batch_df: DataFrame, _batch_id: int
+    ) -> DD.ContainmentState:
         upserts, deletes = collapse_batch(batch_df)
         return DD.apply_containment_changes(
             prev, upserts, deletes, df_cap=df_cap, threshold=threshold
@@ -113,6 +108,5 @@ def run_containment_maintenance(
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

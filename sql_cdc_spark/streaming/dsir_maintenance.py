@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions import dedup as DD
 from sql_cdc_spark.functions import text as TX
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.queries.corpus_q import DSIR_K, DSIR_NGRAM, MIN_QUALITY
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.dedup_maintenance import (
@@ -53,10 +52,6 @@ class DSIRState(NamedTuple):
     dg: DataFrame   # (doc_id, is_tgt, sh64, n) — per-doc occurrences
     raw: DataFrame  # (sh64, raw_cnt) — whole-corpus census
     tgt: DataFrame  # (sh64, tgt_cnt) — target-side census
-
-    def release(self) -> None:
-        for f in (self.dg, self.raw, self.tgt):
-            release_local_checkpoint(f)
 
 
 _ckpt = FEED.ckpt
@@ -153,12 +148,11 @@ def run_dsir_maintenance(
 ) -> tuple[DSIRState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
-    def _apply(prev: DSIRState, batch_df: DataFrame) -> DSIRState:
+    def _apply(prev: DSIRState, batch_df: DataFrame, _batch_id: int) -> DSIRState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_dsir_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -69,10 +69,10 @@ def run_streaming_expectations(
     path for that). Returns (total violations per rule across batches,
     n_batches)."""
     def _apply(state: dict, batch_df: DataFrame, batch_id: int) -> dict:
-        # the REAL foreachBatch id (third-parameter form of drain_feed's
-        # apply contract): checkpoint-persisted, so evidence directories
-        # stay stable across restart/replay and a resumed drain keeps
-        # numbering instead of restarting at 0 and colliding
+        # the REAL foreachBatch id, as drain_feed passes it: checkpoint-
+        # persisted, so evidence directories stay stable across
+        # restart/replay and a resumed drain keeps numbering instead of
+        # restarting at 0 and colliding
         for rule, n in check_batch(
             batch_df, rules, violations_dir, batch_id
         ).items():
@@ -81,7 +81,7 @@ def run_streaming_expectations(
 
     final, n_batches = FEED.drain_feed(
         spark, feed_dir, schema, checkpoint,
-        {}, _apply, lambda s: None,
+        {}, _apply,
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )
     return final, n_batches

@@ -1,12 +1,22 @@
-"""Shared scaffolding for the streaming state-maintenance family
-(near-dup, ANN postings, HLL sketches, DF/IDF vocabulary, SCD2 history).
+"""The one availableNow drain of the engine, and its feed helpers.
 
-Every maintenance module has the same skeleton: a schema'd parquet
-readStream over an append-only change-feed directory, a latest-op-per-key
-collapse of each micro-batch, and a foreachBatch availableNow drain that
-threads a state object through the batches, releasing each superseded
-snapshot. One implementation here means a drain-loop fix (timeout
-handling, release ordering) lands everywhere at once.
+Every streaming consumer runs through ``drain_feed``: the CDC document
+stream (pipeline.run_available_now), the expectations gate
+(expectations.run_streaming_expectations) and every ``*_maintenance``
+twin. Each reads a schema'd parquet change-feed directory
+(``read_feed``), optionally collapses each micro-batch to the latest op
+per key (``collapse_latest``) and threads a state through the batches
+with foreachBatch. A change to the drain (timeout handling, release
+ordering, and state save/load once states must survive a crash)
+therefore lands here once.
+
+Ownership contract: the state passed to ``drain_feed`` and every state
+it supersedes belong to the drain, which frees each one with
+``functions.dedup.release_local_checkpoint`` the moment its successor
+exists — callers must not reuse the passed-in state afterwards. The
+returned state is live and caller-owned. A state is a DataFrame, a
+(Named)tuple of them nested to any depth, or any plain value (a count,
+a dict), which has nothing to free.
 """
 
 from __future__ import annotations
@@ -15,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sql_cdc_spark.functions.dedup import release_local_checkpoint
 
 
 def ckpt(df: DataFrame, enabled: bool) -> DataFrame:
@@ -100,89 +112,62 @@ def discover_feed_schema(spark: SparkSession, feed_dir: str, required: str):
 
 
 def collapse_latest(
-    batch_df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    version_col: str = "change_version",
-    op_col: str = "op",
+    batch_df: DataFrame, id_col: str, *payload_cols: str
 ) -> tuple[DataFrame, DataFrame]:
     """Latest-op-per-key collapse of one change batch → (upserts,
     deletes). Plain batch column algebra, unit-testable without a
     stream; a key whose last op in the batch is a delete lands in
-    ``deletes``, every other key in ``upserts`` with its winning
-    payload."""
+    ``deletes``, every other key with a non-null FIRST payload column in
+    ``upserts`` with its winning payload columns."""
     # the ordering key includes op and payload so a same-version tie
     # (at-least-once source duplicating across an update/delete race)
     # resolves DETERMINISTICALLY — replay routes the key identically,
     # which the maintenance family's idempotence claims require
     latest = batch_df.groupBy(id_col).agg(
         F.max_by(
-            F.struct(op_col, payload_col),
-            F.struct(version_col, op_col, payload_col),
+            F.struct("op", *payload_cols),
+            F.struct("change_version", "op", *payload_cols),
         ).alias("w")
     )
     upserts = latest.filter(
-        (F.col(f"w.{op_col}") != "D") & F.col(f"w.{payload_col}").isNotNull()
-    ).select(id_col, F.col(f"w.{payload_col}").alias(payload_col))
-    deletes = latest.filter(F.col(f"w.{op_col}") == "D").select(id_col)
+        (F.col("w.op") != "D") & F.col(f"w.{payload_cols[0]}").isNotNull()
+    ).select(id_col, *(F.col(f"w.{c}").alias(c) for c in payload_cols))
+    deletes = latest.filter(F.col("w.op") == "D").select(id_col)
     return upserts, deletes
 
 
 def drain_feed(
     spark: SparkSession,
     feed_dir: str,
-    schema: str,
+    schema,
     checkpoint_dir: str,
     initial,
     apply_fn: Callable,
-    release_fn: Callable,
     *,
     max_files_per_trigger: int | None = 1,
     timeout_s: int = 300,
 ):
     """Drain the change feed with trigger(availableNow), threading the
-    state through ``apply_fn(prev_state, batch_df) -> next_state`` per
-    micro-batch; returns (final_state, n_batches). A drain that does not
-    terminate within ``timeout_s`` is STOPPED and raises TimeoutError —
-    never a silent partial state with a live stream still mutating it;
-    the checkpoint resumes the drain on the next call.
+    state through ``apply_fn(prev_state, batch_df, batch_id) ->
+    next_state`` per micro-batch; returns (final_state, n_batches).
+    ``batch_id`` is the real foreachBatch id — the one the checkpoint
+    persists, so it is stable across restart/replay and keeps numbering
+    across a resumed drain.
 
-    Ownership: each superseded state is released via ``release_fn`` the
-    moment its successor exists — callers must not reuse the passed-in
-    state after this returns; the returned state is live and
-    caller-owned. An apply that returns the SAME object (a no-op batch,
-    e.g. fully replayed under a watermark cursor) releases nothing.
-
-    An ``apply_fn`` declaring a THIRD parameter also receives the real
-    foreachBatch batch id — the one the checkpoint persists, so it is
-    stable across restart/replay and keeps numbering across a resumed
-    drain (a caller-side counter would restart at 0 and collide)."""
-    import inspect
-
-    # Only REQUIRED positional params count toward the 3-arg form: a
-    # defaulted or keyword-only third param (config flags, loggers) must
-    # not silently receive the batch id.
-    wants_id = (
-        sum(
-            1
-            for p in inspect.signature(apply_fn).parameters.values()
-            if p.kind
-            in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD, p.VAR_POSITIONAL)
-            and p.default is p.empty
-        )
-        >= 3
-    )
+    Each superseded state is released the moment its successor exists
+    (module docstring); an apply that returns the SAME object (a no-op
+    batch, e.g. fully replayed under a watermark cursor) releases
+    nothing. A drain that does not terminate within ``timeout_s`` is
+    STOPPED and raises TimeoutError — never a silent partial state with
+    a live stream still mutating it; the checkpoint resumes the drain on
+    the next call."""
     holder: dict = {"state": initial, "batches": 0}
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         prev = holder["state"]
-        nxt = (
-            apply_fn(prev, batch_df, int(batch_id))
-            if wants_id
-            else apply_fn(prev, batch_df)
-        )
+        nxt = apply_fn(prev, batch_df, int(batch_id))
         if nxt is not prev:
-            release_fn(prev)
+            release_local_checkpoint(prev)
         holder["state"] = nxt
         holder["batches"] += 1
 
@@ -196,14 +181,14 @@ def drain_feed(
     if not query.awaitTermination(timeout_s):
         # Returning a partial state here would be a live hazard, not just
         # an incomplete answer: the still-running stream keeps applying
-        # batches and release_fn-ing the very object the caller would
-        # hold. Stop the stream and fail loudly; the checkpoint makes the
-        # next drain resume exactly where this one was cut off. The last
-        # applied state is released too (ownership transferred to this
-        # drain — the docstring contract), so repeated timeouts in a
-        # long-lived session don't accumulate orphaned checkpoint blocks.
+        # batches and releasing the very object the caller would hold.
+        # Stop the stream and fail loudly; the checkpoint makes the next
+        # drain resume exactly where this one was cut off. The last
+        # applied state is released too (it belongs to this drain), so
+        # repeated timeouts in a long-lived session don't accumulate
+        # orphaned checkpoint blocks.
         query.stop()
-        release_fn(holder["state"])
+        release_local_checkpoint(holder["state"])
         raise TimeoutError(
             f"feed drain at {feed_dir} exceeded {timeout_s}s after "
             f"{holder['batches']} batches; checkpoint {checkpoint_dir} "

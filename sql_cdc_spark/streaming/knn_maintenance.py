@@ -56,10 +56,6 @@ class KnnState(NamedTuple):
     vb: DataFrame    # (vec_id, embedding, bucket) — bucketed corpus
     best: DataFrame  # (vec_id, nn_id, cos_sim, bucket) — top-1 table
 
-    def release(self) -> None:
-        for f in (self.vb, self.best):
-            release_local_checkpoint(f)
-
 
 _ckpt = FEED.ckpt
 
@@ -135,12 +131,11 @@ def run_knn_maintenance(
     """Drain the embedding change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
 
-    def _apply(prev: KnnState, batch_df: DataFrame) -> KnnState:
+    def _apply(prev: KnnState, batch_df: DataFrame, _batch_id: int) -> KnnState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_knn_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

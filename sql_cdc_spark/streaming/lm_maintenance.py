@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions import dedup as DD
 from sql_cdc_spark.functions import sampling as SP
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.queries.corpus_q import LM_NGRAM, TEST_FRAC, VAL_FRAC
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.dedup_maintenance import (
@@ -51,10 +50,6 @@ class LMState(NamedTuple):
 
     tg: DataFrame  # (doc_id, sh64, n) — per-TRAIN-doc gram occurrences
     lm: DataFrame  # (sh64, cnt) — the train-split gram census
-
-    def release(self) -> None:
-        for f in (self.tg, self.lm):
-            release_local_checkpoint(f)
 
 
 _ckpt = FEED.ckpt
@@ -171,12 +166,11 @@ def run_lm_maintenance(
 ) -> tuple[LMState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
-    def _apply(prev: LMState, batch_df: DataFrame) -> LMState:
+    def _apply(prev: LMState, batch_df: DataFrame, _batch_id: int) -> LMState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_lm_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -66,10 +66,6 @@ class ManifestState(NamedTuple):
     gated: DataFrame  # (doc_id, lang, source, text, n_tokens, quality, digest)
     nd: DD.NearDupState
 
-    def release(self) -> None:
-        DD.release_local_checkpoint(self.gated)
-        self.nd.release()
-
 
 def _gate(docs: DataFrame, min_tokens: int, min_quality: float) -> DataFrame:
     """Score + gate — the scan-local stage 1+2 of prepare_training_corpus,
@@ -222,29 +218,19 @@ def manifest_from_state(
 
 def collapse_batch(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Latest-op-per-doc collapse carrying the multi-column payload
-    (lang, source, text); same winning rule as feed.collapse_latest —
-    including its (version, op, payload) ORDERING key, so a
-    same-version U/D duplicate pair (at-least-once source racing an
-    update against a delete) resolves deterministically and replay
-    routes the doc identically, which the idempotence claims both
-    modules inherit require (ADVICE r4). TEXT is the first payload
-    tiebreak column — same position it holds in the single-payload
-    collapse — so a feed consumed through BOTH paths (manifest state
-    here, text-only dedup state there) elects the SAME winner for a
-    same-version same-op duplicate whose lang and text both differ;
-    ordering lang/source ahead of text could split the election
-    across modules (ADVICE r5)."""
-    latest = batch_df.groupBy("doc_id").agg(
-        F.max_by(
-            F.struct("op", "lang", "source", "text"),
-            F.struct("change_version", "op", "text", "lang", "source"),
-        ).alias("w")
-    )
-    upserts = latest.filter(
-        (F.col("w.op") != "D") & F.col("w.text").isNotNull()
-    ).select("doc_id", "w.lang", "w.source", "w.text")
-    deletes = latest.filter(F.col("w.op") == "D").select("doc_id")
-    return upserts, deletes
+    (text, lang, source) — feed.collapse_latest, whose (version, op,
+    payload) ORDERING key makes a same-version U/D duplicate pair
+    (at-least-once source racing an update against a delete) resolve
+    deterministically, so replay routes the doc identically, which the
+    idempotence claims of every module reading this feed require
+    (ADVICE r4)."""
+    # TEXT is the first payload tiebreak column — the same position it
+    # holds in the text-only collapse — so a feed consumed through BOTH
+    # paths (manifest state here, text-only dedup state there) elects
+    # the SAME winner for a same-version same-op duplicate whose lang and
+    # text both differ; ordering lang/source ahead of text could split
+    # the election across modules (ADVICE r5)
+    return FEED.collapse_latest(batch_df, "doc_id", "text", "lang", "source")
 
 
 def run_manifest_maintenance(
@@ -266,7 +252,7 @@ def run_manifest_maintenance(
     run_dedup_maintenance: superseded states are released, the returned
     state is live and caller-owned."""
 
-    def _apply(prev: ManifestState, batch_df: DataFrame) -> ManifestState:
+    def _apply(prev: ManifestState, batch_df: DataFrame, _batch_id: int) -> ManifestState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_manifest_changes(
             prev,
@@ -285,7 +271,6 @@ def run_manifest_maintenance(
         checkpoint,
         initial,
         _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger,
         timeout_s=timeout_s,
     )

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions import text as TX
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.queries.text_q import PASSAGE_WORDS
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.manifest_maintenance import (
@@ -49,10 +48,6 @@ class PassageState(NamedTuple):
 
     doc_passages: DataFrame  # (doc_id, source, passage, k) multisets
     counts: DataFrame        # (passage, n_occ) corpus-wide totals
-
-    def release(self) -> None:
-        release_local_checkpoint(self.doc_passages)
-        release_local_checkpoint(self.counts)
 
 
 _ckpt = FEED.ckpt
@@ -160,12 +155,12 @@ def run_passage_maintenance(
     ``initial`` and every superseded state are released; the returned
     state is live and caller-owned."""
 
-    def _apply(prev: PassageState, batch_df: DataFrame) -> PassageState:
+    def _apply(prev: PassageState, batch_df: DataFrame, _batch_id: int) -> PassageState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_passage_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, MANIFEST_CHANGE_SCHEMA, checkpoint_dir, initial,
-        _apply, lambda s: s.release(),
+        _apply,
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -7,9 +7,10 @@ sqls/storedprocedure.sql:4-57) rebuilt two ways:
    cursor, snapshot-bounded scan, inclusive re-read + dedup, bounded
    ordered batch, per-document sink, advance-only-on-success.
 2. ``run_available_now`` — the idiomatic Spark shape: Structured
-   Streaming over the change log with foreachBatch + checkpointLocation;
-   offsets replace the hand-rolled cursor, idempotent (deterministically
-   named) document writes give effectively-exactly-once (T3).
+   Streaming over the change log through the engine's one drain,
+   ``feed.drain_feed`` (foreachBatch + checkpointLocation); offsets
+   replace the hand-rolled cursor, idempotent (deterministically named)
+   document writes give effectively-exactly-once (T3).
 
 Both run the same generated Spark SQL statement (``_documents_sql``),
 so the relational core is written once: the pull binds its cursor,
@@ -40,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_cdc_spark.streaming import changelog as cl
+from sql_cdc_spark.streaming.feed import drain_feed
 from sql_cdc_spark.streaming.registry import SyncStateRegistry
 
 
@@ -475,25 +477,31 @@ def run_available_now(
     doc_format: str = "json",
     error_dir: str | None = None,
 ) -> dict:
-    """Structured Streaming form: readStream over the change log →
-    foreachBatch(collapse → enrich → nest → idempotent per-doc sink) with
-    one checkpointLocation per consumer name (T6: independent named
-    consumers = independent checkpoints; T7 reset = delete the dir).
+    """Structured Streaming form: the change log drained through
+    ``feed.drain_feed`` with one checkpointLocation per consumer name (T6:
+    independent named consumers = independent checkpoints; T7 reset =
+    delete the dir). Each micro-batch runs the pull's statement unbounded
+    and writes its documents through the idempotent per-document sink;
+    the drain's state is the running document count.
 
     trigger(availableNow=True) drains everything present then stops —
     the reference's poll-until-hasMore loop, minus the hand-rolled cursor:
     exact file-source offsets in the checkpoint replace (version, id).
+    ``max_files_per_trigger`` is the backpressure bound — the reference's
+    ``limit`` analog (T8). With a ``registry``, every non-empty
+    micro-batch advances the consumer's cursor to its last (version,
+    key), header-less and segregated keys included, as ``pull_batch``
+    does, so ``consumer_lag`` sees what the stream consumed.
 
     ``doc_format="bson"`` writes reference-parity .bson files
     (invoice-api/server.js:62-80) through the same idempotent sink.
 
     A stream still running after ``timeout_s`` is stopped and
     ``TimeoutError`` raised; its checkpoint resumes it on the next call.
+    Returns ``{"batches", "documents"}``.
     """
     if doc_format not in ("json", "bson"):
         raise ValueError(f"doc_format must be 'json' or 'bson', got {doc_format!r}")
-    stream = cl.read_changelog_stream(spark, log_dir, max_files_per_trigger)
-    metrics: dict = {"batches": 0, "documents": 0}
     write_one = _write_bson if doc_format == "bson" else _write_json
     # A micro-batch runs in the stream's own session, cloned at start():
     # header and lines reach it as temp views registered before start.
@@ -501,53 +509,39 @@ def run_available_now(
     header.createOrReplaceTempView(views["header"])
     lines.createOrReplaceTempView(views["lines"])
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
+    def _apply(documents: int, batch_df: DataFrame, _batch_id: int) -> int:
         session = batch_df.sparkSession
         docs = _documents(session, model, batch_df, session.table(views["header"]),
                           session.table(views["lines"]))
-        last = (0, 0)
+        last = None
 
         def _rows():
             # one pass over the batch's rows: documents to the sink, every
             # key (header-less ones too) to the cursor
             nonlocal last
             for r in docs.toLocalIterator():
-                last = max(last, (r.change_version, r.invoice_id))
+                key = (r.change_version, r.invoice_id)
+                if last is None or key > last:
+                    last = key
                 if r.doc_filename is not None:
                     yield r.doc_filename, r.doc_json
 
         n = _deliver(_rows(), out_dir, error_dir, write_one)
-        metrics["batches"] += 1
-        metrics["documents"] += n
-        if registry is not None and n > 0:
+        # the cursor covers the whole batch, as in pull_batch; a batch
+        # with no rows has nothing to advance to
+        if registry is not None and last is not None:
             registry.advance(consumer, *last)
+        return documents + n
 
-    checkpoint = os.path.join(checkpoint_root, consumer)
     try:
-        query = (
-            stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        documents, batches = drain_feed(
+            spark, log_dir, cl.CHANGELOG_SCHEMA, os.path.join(checkpoint_root, consumer),
+            0, _apply, max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
         )
-        if not query.awaitTermination(timeout_s):
-            # a query left running would keep writing after the caller
-            # moved on; the checkpoint resumes where this one was cut off
-            query.stop()
-            raise TimeoutError(
-                f"stream for consumer {consumer!r} exceeded {timeout_s}s after "
-                f"{metrics['batches']} batches; checkpoint {checkpoint} resumes it"
-            )
     finally:
         for name in views.values():
             spark.catalog.dropTempView(name)
-    progress = query.lastProgress
-    if progress:
-        metrics["last_progress"] = {
-            "inputRowsPerSecond": progress.get("inputRowsPerSecond"),
-            "numInputRows": progress.get("numInputRows"),
-        }
-    return metrics
+    return {"batches": batches, "documents": documents}
 
 
 def reset_consumer(registry: SyncStateRegistry, checkpoint_root: str, consumer: str) -> None:

@@ -39,29 +39,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.functions.similarity import PQ_K, PQ_M, pq_codebooks, pq_encode
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.ann_maintenance import (
     CHANGE_SCHEMA,
-    read_embedding_changes,
+    collapse_batch,
 )
 
 __all__ = [
     "CHANGE_SCHEMA",
-    "read_embedding_changes",
     "collapse_batch",
     "build_codes",
     "apply_codes_changes",
     "run_pq_maintenance",
 ]
-
-
-def collapse_batch(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Latest-op-per-vector collapse of one change batch → (upserts,
-    deletes) — streaming/feed.py::collapse_latest on (vec_id,
-    embedding)."""
-    return FEED.collapse_latest(batch_df, "vec_id", "embedding")
 
 
 def build_codes(
@@ -126,12 +117,12 @@ def run_pq_maintenance(
     RELEASED as it is superseded — callers must not reuse the passed-in
     frame after this returns. The returned codes are live and
     caller-owned."""
-    def _apply(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    def _apply(prev: DataFrame, batch_df: DataFrame, _batch_id: int) -> DataFrame:
         upserts, deletes = collapse_batch(batch_df)
         return apply_codes_changes(prev, upserts, deletes, books)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial_codes,
-        _apply, release_local_checkpoint,
+        _apply,
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

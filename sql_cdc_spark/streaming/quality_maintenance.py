@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions import text as TX
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.manifest_maintenance import (
     MANIFEST_CHANGE_SCHEMA,
@@ -57,10 +56,6 @@ class QualityState(NamedTuple):
 
     assign: DataFrame  # (doc_id, lang, q_u) — one row per live doc
     hist: DataFrame    # (lang, q_u, cnt) — the value histogram
-
-    def release(self) -> None:
-        for f in (self.assign, self.hist):
-            release_local_checkpoint(f)
 
 
 _ckpt = FEED.ckpt
@@ -139,12 +134,12 @@ def run_quality_maintenance(
 ) -> tuple[QualityState, int]:
     """Drain the document change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
-    def _apply(prev: QualityState, batch_df: DataFrame) -> QualityState:
+    def _apply(prev: QualityState, batch_df: DataFrame, _batch_id: int) -> QualityState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_quality_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, MANIFEST_CHANGE_SCHEMA, checkpoint_dir, initial,
-        _apply, lambda s: s.release(),
+        _apply,
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -29,7 +29,6 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.operators.cdc import scd2_apply, scd2_history
 from sql_cdc_spark.streaming import feed as FEED
 
@@ -51,9 +50,6 @@ class SCD2State(NamedTuple):
 
     history: DataFrame  # (key_id, payload…, valid_from, valid_to, is_current)
     watermark: int      # highest change_version already merged
-
-    def release(self) -> None:
-        release_local_checkpoint(self.history)
 
 
 _ckpt = FEED.ckpt
@@ -106,15 +102,6 @@ def apply_scd2_batch(
     return SCD2State(_ckpt(merged, checkpoint), int(wm_row["wm"]))
 
 
-def read_scd2_changes(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = 1
-) -> DataFrame:
-    """Streaming source over a parquet dimension-change feed."""
-    return FEED.read_feed(
-        spark, feed_dir, SCD2_CHANGE_SCHEMA, max_files_per_trigger
-    )
-
-
 def run_scd2_maintenance(
     spark: SparkSession,
     feed_dir: str,
@@ -133,7 +120,6 @@ def run_scd2_maintenance(
     makes redelivery harmless rather than double-applied."""
     return FEED.drain_feed(
         spark, feed_dir, SCD2_CHANGE_SCHEMA, checkpoint_dir, initial,
-        lambda prev, batch_df: apply_scd2_batch(prev, batch_df),
-        lambda s: s.release(),
+        lambda prev, batch_df, _batch_id: apply_scd2_batch(prev, batch_df),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -42,7 +42,6 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.functions.text import bm25_rank, normalize_words
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.manifest_maintenance import (
@@ -69,10 +68,6 @@ class SearchState(NamedTuple):
 
     postings: DataFrame  # (doc_id, term, tf) — all terms, live docs
     docs: DataFrame      # (doc_id, dl) — doc-length census
-
-    def release(self) -> None:
-        for f in (self.postings, self.docs):
-            release_local_checkpoint(f)
 
 
 def _tokenize(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -169,17 +164,14 @@ def run_search_maintenance(
     applying each micro-batch to the index; returns (final_state,
     n_batches). Ownership: ``initial`` (and every intermediate snapshot)
     is RELEASED as superseded — the returned state is caller-owned."""
-    def _apply(prev: SearchState, batch_df: DataFrame) -> SearchState:
+    def _apply(prev: SearchState, batch_df: DataFrame, _batch_id: int) -> SearchState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_search_changes(
             prev, upserts.select("doc_id", "text"), deletes
         )
 
-    def _release(st: SearchState) -> None:
-        st.release()
-
     return FEED.drain_feed(
         spark, feed_dir, MANIFEST_CHANGE_SCHEMA, checkpoint_dir, initial,
-        _apply, _release,
+        _apply,
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -54,10 +54,6 @@ class SemDedupState(NamedTuple):
     vb: DataFrame       # (vec_id, embedding, bucket) — bucketed corpus
     dropped: DataFrame  # (vec_id, keeper_id, cos_sim, bucket) — election
 
-    def release(self) -> None:
-        for f in (self.vb, self.dropped):
-            release_local_checkpoint(f)
-
 
 _ckpt = FEED.ckpt
 
@@ -116,12 +112,11 @@ def run_semdedup_maintenance(
 ) -> tuple[SemDedupState, int]:
     """Drain the embedding change feed with trigger(availableNow),
     applying each micro-batch; returns (final_state, n_batches)."""
-    def _apply(prev: SemDedupState, batch_df: DataFrame) -> SemDedupState:
+    def _apply(prev: SemDedupState, batch_df: DataFrame, _batch_id: int) -> SemDedupState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_semdedup_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -21,18 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.functions.sketches import HLL_P, hll_registers, merge_registers
 from sql_cdc_spark.streaming import feed as FEED
 
 EVENT_SCHEMA = "group_key string, value long, change_version long"
-
-
-def read_event_feed(
-    spark: SparkSession, feed_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming source over a parquet append-only event feed."""
-    return FEED.read_feed(spark, feed_dir, EVENT_SCHEMA, max_files_per_trigger)
 
 
 def apply_sketch_batch(
@@ -69,11 +61,11 @@ def run_sketch_maintenance(
     released; the returned state is live and caller-owned."""
     gcols = group_cols or ["group_key"]
 
-    def _apply(prev: DataFrame, batch_df: DataFrame) -> DataFrame:
+    def _apply(prev: DataFrame, batch_df: DataFrame, _batch_id: int) -> DataFrame:
         return apply_sketch_batch(prev, batch_df, gcols, value_col, p)
 
     return FEED.drain_feed(
         spark, feed_dir, EVENT_SCHEMA, checkpoint_dir, initial_state,
-        _apply, release_local_checkpoint,
+        _apply,
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_cdc_spark.functions import text as TX
-from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming.dedup_maintenance import (
     CHANGE_SCHEMA,
@@ -46,13 +45,6 @@ class VocabState(NamedTuple):
     doc_ids: DataFrame   # (doc_id) — live documents (exact n_docs source)
     postings: DataFrame  # (doc_id, word) distinct pairs
     df: DataFrame        # (word, df) document-frequency counts
-
-    def release(self, keep_df: bool = False) -> None:
-        frames = [self.doc_ids, self.postings]
-        if not keep_df:
-            frames.append(self.df)
-        for f in frames:
-            release_local_checkpoint(f)
 
 
 _ckpt = FEED.ckpt
@@ -146,12 +138,11 @@ def run_vocab_maintenance(
     applying each micro-batch; returns (final_state, n_batches).
     ``initial`` and every superseded state are released; the returned
     state is live and caller-owned."""
-    def _apply(prev: VocabState, batch_df: DataFrame) -> VocabState:
+    def _apply(prev: VocabState, batch_df: DataFrame, _batch_id: int) -> VocabState:
         upserts, deletes = collapse_batch(batch_df)
         return apply_vocab_changes(prev, upserts, deletes)
 
     return FEED.drain_feed(
         spark, feed_dir, CHANGE_SCHEMA, checkpoint_dir, initial, _apply,
-        lambda s: s.release(),
         max_files_per_trigger=max_files_per_trigger, timeout_s=timeout_s,
     )

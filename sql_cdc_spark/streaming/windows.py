@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from sql_cdc_spark.streaming.feed import read_feed
+
 if TYPE_CHECKING:
     from collections.abc import Iterator
 
@@ -44,10 +46,7 @@ EVENT_SCHEMA = T.StructType(
 def read_event_stream(spark, src_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source event stream with the canonical schema; maxFilesPerTrigger
     is the backpressure bound (one micro-batch per file ≈ one CDC pull)."""
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(src_dir)
+    return read_feed(spark, src_dir, EVENT_SCHEMA, max_files_per_trigger)
 
 
 def windowed_counts(

@@ -561,7 +561,7 @@ def test_incremental_near_dup_random_rounds_property(spark, docs):
         state = DD.apply_near_dup_changes(
             prev, upserts, deletes, max_bucket_size=10, threshold=0.5
         )
-        prev.release()
+        DD.release_local_checkpoint(prev)
         for i in dels:
             live.pop(i)
         for i, t in up_rows + ins_rows:
@@ -711,8 +711,8 @@ def test_incremental_containment_chained_batches(spark, docs):
     st2 = DD.apply_containment_changes(
         st1, upd, dels, df_cap=10, threshold=0.2
     )
-    st.release()
-    st1.release()
+    DD.release_local_checkpoint(st)
+    DD.release_local_checkpoint(st1)
     final = (
         base.join(dels, "doc_id", "left_anti")
         .join(upd.select("doc_id"), "doc_id", "left_anti")

@@ -26,85 +26,6 @@ def test_salted_join_matches_unsalted_inner_and_left(spark):
         assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
-def test_registry_window_holds_all_round10_queries():
-    """Driver contract: only the first 50 registry entries are
-    hash-checked per round, so every query added or changed this round
-    must sit inside that window — silently rotating one out would skip
-    its verification the very round it changed. Per VERDICT r8 #7 the
-    published list is pinned by POSITION, not just membership: a module
-    reorder that silently swaps the window now fails here."""
-    from sql_cdc_spark.queries import _registry
-
-    window = list(_registry())[:50]
-    published_round10 = [
-        # changed this round (r10 optimization): ann-recall probe
-        # kernel; family shingle-frame shares; winnow base share; dsir
-        # census fusion (see queries/__init__.py rotation note)
-        "sim_ann_recall_eval",
-        "dd_jaccard_pairs",
-        "dd_source_overlap",
-        "crp_fuzzy_contamination",
-        "crp_dsir_select",
-        "txt_winnow_pairs",
-        "txt_winnow_fingerprints",
-        # rotation debt: the 13 remaining r5 greens (staleness 4)
-        "rel_semi_join_big_spenders",
-        "rel_top_revenue_orders",
-        "rel_topn_other_rollup",
-        "rel_union_all_segments",
-        "scl_salted_pricing",
-        "sim_bucketed_topk",
-        "sim_lsh_buckets",
-        "txt_quality_gate",
-        "txt_token_stats",
-        "win_lag_delta",
-        "win_latest_n_per_user",
-        "win_moving_avg",
-        "win_running_total",
-        # rotation debt: the r6 cohort (staleness 3), alphabetical
-        "cdc_changes_scan",
-        "cdc_flagship_documents",
-        "cdc_net_changes_enriched",
-        "cdc_replica_sync",
-        "crp_domain_reweight",
-        "crp_ngram_lm_score",
-        "dd_dedup_impact",
-        "dd_exact",
-        "dd_minhash_signatures",
-        "evt_late_data_filter",
-        "evt_session_windows",
-        "evt_sliding_windows",
-        "evt_top_users_per_day",
-        "evt_value_percentiles",
-        "mm_decode_features",
-        "mm_frame_sample",
-        "mm_resize_digest",
-        "rel_fuzzy_match_block",
-        "rel_grouping_sets",
-        "scl_compaction_plan",
-        "scl_group_zscore",
-        "scl_salted_join_segments",
-        "scl_skew_census",
-        "sim_centroid_assign",
-        "sim_embedding_quantize",
-        "sim_hybrid_search",
-        "sim_ivf_topk",
-        "sim_multiprobe_topk",
-        "sim_power_iteration",
-        "sim_topk_cosine",
-    ]
-    assert len(published_round10) == 50
-    mismatches = [
-        (i, got, want)
-        for i, (got, want) in enumerate(zip(window, published_round10))
-        if got != want
-    ]
-    assert not mismatches, (
-        "driver window deviates from the published round-10 list "
-        f"(slot, got, expected): {mismatches[:5]}"
-    )
-
-
 def test_refresh_aggregate_groups_matches_full_recompute(spark):
     """Incremental rollup maintenance == full re-aggregation through a
     CDC round containing an update, a delete (incl. a fully-emptied

@@ -382,3 +382,22 @@ def test_stream_timeout_stops_query(spark, base, tmp_path, monkeypatch):
         for k, (v, _op) in _oracle_latest(spark, w.log_dir, lines).items() if k in present
     }
     assert set(os.listdir(out_dir)) == expected
+
+
+def test_stream_cursor_covers_header_less_keys(spark, base, tmp_path):
+    """The stream's registry cursor advances over every consumed key, as
+    ``pull_batch`` does: a last micro-batch that changes only an invoice
+    absent from the header writes no document but still moves the cursor
+    to that change, so ``consumer_lag`` does not report it pending."""
+    header, lines = base
+    w = _gen_changes(spark, tmp_path, n_rounds=1, keys=range(0, 10), seed=19)
+    w.append([(cl.HEADER_TABLE, 990000, "D")])
+    reg = SyncStateRegistry(str(tmp_path / "state"))
+    m = pl.run_available_now(
+        spark, w.log_dir, "s", header, lines, MODEL, str(tmp_path / "docs"),
+        str(tmp_path / "chk"), registry=reg, max_files_per_trigger=1,
+    )
+    assert m["documents"] > 0
+    change = spark.read.parquet(w.log_dir).filter(F.col("key_id") == 990000).first()
+    st = reg.read("s")
+    assert (st.last_sync_version, st.last_processed_id) == (change.change_version, 990000)

@@ -45,6 +45,13 @@ CORE_ORACLE = {
 }
 
 
+def test_core_oracle_names_have_oracles():
+    """A CORE_ORACLE name absent from ORACLE_CASES (renamed query, lost
+    oracle) would silently drop out of the core tier."""
+    missing = sorted(CORE_ORACLE - set(ORACLE_CASES))
+    assert not missing, f"CORE_ORACLE names without an oracle case: {missing}"
+
+
 def _tiered(names):
     return [
         pytest.param(

@@ -14,7 +14,9 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from sql_cdc_spark import tables
+from sql_cdc_spark.functions.dedup import release_local_checkpoint
 from sql_cdc_spark.streaming import changelog as cl
+from sql_cdc_spark.streaming import feed as FEED
 from sql_cdc_spark.streaming import pipeline as pl
 from sql_cdc_spark.streaming.registry import SyncStateRegistry
 from tests.cdc_support import MODEL, _gen_changes, _oracle_latest
@@ -362,7 +364,7 @@ def test_streaming_replica_maintenance_with_deletes(spark, base, tmp_path):
 
     def drain():
         q = (
-            cl.read_changelog_stream(spark, w.log_dir)
+            FEED.read_feed(spark, w.log_dir, cl.CHANGELOG_SCHEMA)
             .writeStream.foreachBatch(merge)
             .option("checkpointLocation", chk)
             .trigger(availableNow=True)
@@ -445,7 +447,7 @@ def test_streaming_rollup_maintenance(spark, base, tmp_path):
 
     def drain():
         q = (
-            cl.read_changelog_stream(spark, w.log_dir)
+            FEED.read_feed(spark, w.log_dir, cl.CHANGELOG_SCHEMA)
             .writeStream.foreachBatch(refresh)
             .option("checkpointLocation", str(tmp_path / "chk"))
             .trigger(availableNow=True)
@@ -553,7 +555,7 @@ def test_feed_schema_evolution_stream_drain(spark, tmp_path):
         spark, feed, "doc_id long, op string, change_version long"
     )
 
-    def _apply(state: dict, batch_df) -> dict:
+    def _apply(state: dict, batch_df, _batch_id) -> dict:
         packed = batch_df.withColumn("payload", F.struct("text", "lang"))
         ups, dels = FEED.collapse_latest(packed, "doc_id", "payload")
         nxt = dict(state)
@@ -565,7 +567,7 @@ def test_feed_schema_evolution_stream_drain(spark, tmp_path):
 
     final, n_batches = FEED.drain_feed(
         spark, feed, merged, str(tmp_path / "chk"), {}, _apply,
-        lambda s: None, max_files_per_trigger=1,
+        max_files_per_trigger=1,
     )
     assert n_batches >= 1
     assert final == {
@@ -1192,7 +1194,7 @@ def test_streaming_scd2_maintenance_equals_full_recompute(spark, tmp_path):
     cold = SM.apply_scd2_batch(empty, full, checkpoint=False)
     got_cold = sorted(tuple(r) for r in cold.history.select(*cols).collect())
     assert got_cold == want
-    final.release()
+    release_local_checkpoint(final)
 
 
 def test_streaming_chunk_maintenance_equals_full_recompute(spark, tmp_path):
@@ -1491,7 +1493,7 @@ def test_streaming_hybrid_index_composition_equals_batch(spark, tmp_path):
 
     # dense state through the SAME feed, its own drain: latest-op
     # collapse → remove-then-readd on the vector table
-    def _apply_vec(prev, batch_df):
+    def _apply_vec(prev, batch_df, _batch_id=None):
         ups, ds = SM.collapse_batch(batch_df)
         changed = (
             ups.select("doc_id").unionByName(ds).distinct()
@@ -1505,7 +1507,6 @@ def test_streaming_hybrid_index_composition_equals_batch(spark, tmp_path):
     vec_final, vn = FEED.drain_feed(
         spark, feed_dir, SM.MANIFEST_CHANGE_SCHEMA,
         str(tmp_path / "chk_vec"), vec0, _apply_vec,
-        lambda df: None,
     )
     assert vn >= 2
 
@@ -1979,43 +1980,6 @@ def test_maintenance_drain_cold_start_empty_feed(spark, tmp_path):
     assert n == 0
     assert final is st
     assert final.pairs.count() == 0
-
-
-def test_drain_feed_third_param_detection(spark, tmp_path):
-    """Only a REQUIRED third positional parameter opts an apply_fn into
-    the batch-id calling form. A defaulted config flag (strict=False)
-    must keep its default — binding the batch id into it would silently
-    flip caller behavior — and a keyword-only param must not crash the
-    first micro-batch with a 3-positional-arg TypeError."""
-    from sql_cdc_spark.streaming import feed as FEED
-
-    seen: list = []
-
-    def _defaulted(prev, batch_df, strict=False):
-        seen.append(("defaulted", strict))
-        return prev
-
-    def _kwonly(prev, batch_df, *, log=None):
-        seen.append(("kwonly", log))
-        return prev
-
-    def _wants_id(prev, batch_df, batch_id):
-        seen.append(("id", batch_id))
-        return prev
-
-    fdir = str(tmp_path / "feed")
-    spark.createDataFrame([(1, "I", 1)], "k long, op string, v long")\
-        .coalesce(1).write.mode("append").parquet(fdir)
-    schema = "k long, op string, v long"
-    for i, fn in enumerate((_defaulted, _kwonly, _wants_id)):
-        _, n = FEED.drain_feed(
-            spark, fdir, schema, str(tmp_path / f"chk{i}"),
-            None, fn, lambda s: None, timeout_s=60,
-        )
-        assert n == 1
-    assert seen[0] == ("defaulted", False)
-    assert seen[1] == ("kwonly", None)
-    assert seen[2][0] == "id" and isinstance(seen[2][1], int)
 
 
 def test_discover_feed_schema_cold_start(spark, tmp_path):
@@ -2722,23 +2686,6 @@ def test_collapse_latest_same_version_tie_deterministic(spark):
         assert [r.doc_id for r in dels.collect()] == [8]
 
 
-def test_drain_feed_timeout_raises_not_partial(spark, tmp_path):
-    """A drain that cannot finish within timeout_s must STOP and raise —
-    returning a partial state while the stream keeps mutating (and
-    releasing!) it is a correctness hazard, not a soft degradation."""
-    from sql_cdc_spark.streaming import feed as FEED
-
-    fdir = str(tmp_path / "feed")
-    spark.createDataFrame([(1, "I", 1)], "k long, op string, v long")\
-        .coalesce(1).write.mode("append").parquet(fdir)
-    with pytest.raises(TimeoutError, match="resumes the drain"):
-        FEED.drain_feed(
-            spark, fdir, "k long, op string, v long",
-            str(tmp_path / "chk"), None,
-            lambda prev, b: prev, lambda s: None, timeout_s=0.05,
-        )
-
-
 def test_scd2_intra_batch_redelivery_is_noop(spark):
     """The watermark only guards CROSS-batch replay; rows duplicated
     INSIDE one micro-batch (writer retry, duplicated extract in one
@@ -2952,7 +2899,7 @@ def test_streaming_passage_maintenance_equals_full_recompute(spark, tmp_path):
     assert [tuple(r) for r in PM.dup_passage_census(state0).collect()] == [
         tuple(r) for r in txt_dup_passage_census(spark, SF_DIR_SMALL).collect()
     ]
-    state0.release()
+    release_local_checkpoint(state0)
 
     base = full.orderBy("doc_id").limit(120)
     initial = PM.build_passage_state(base)
@@ -3066,7 +3013,7 @@ def test_streaming_knn_maintenance_equals_full_recompute(spark, tmp_path):
     assert {
         (r.vec_id, r.nn_id, r.cos_sim) for r in state0.best.collect()
     } == {tuple(r) for r in sim_knn_join(spark, SF_DIR_SMALL).collect()}
-    state0.release()
+    release_local_checkpoint(state0)
 
     base = emb.orderBy("vec_id").limit(80)
     initial = KM.build_knn_state(base)
